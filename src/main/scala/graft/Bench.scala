@@ -27,8 +27,8 @@ package graft
 object Bench {
 
   /** Minimal JSON string escaping for the hand-built artifact lines
-    * (shared with CellDecadeProbe — r13 advice: an interpolated path
-    * containing a quote/backslash made the probe's line unparseable).
+    * (r13 advice: an interpolated path containing a quote/backslash
+    * made an artifact line unparseable).
     */
   def esc(s: String): String =
     s.flatMap {
@@ -43,7 +43,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
-    // the production session factory — Bench/Verify/Profile must all
+    // the production session factory — Bench and Verify must
     // measure the SAME configuration users run
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -14,27 +14,15 @@ import org.apache.spark.sql.SparkSession
   *     determinism.
   */
 object GraftSession {
-  /** Numeric env knob that a unit suffix gets appended to: fail with a
-    * message naming the VARIABLE, not Spark's opaque byte-string parse
-    * error three frames later (r19 ADVICE).
-    */
-  private def envLong(name: String, default: Long): Long =
-    sys.env.get(name) match {
-      case None => default
-      case Some(v) =>
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"$name must be a plain number (a unit suffix is appended internally); got '$v'")
-        }
-    }
-
-  // SHJ local-map threshold only. The AQE advisory partition size is
-  // defaulted INDEPENDENTLY to 64m below — the SMJ→SHJ conversion
-  // engages only when a campaign exports SPARK_GRAFT_AQE_ADVISORY_MB
-  // down to this threshold (see the conversion-gate comment).
-  private def shjLocalMapMb: Long = envLong("SPARK_GRAFT_SHJ_LOCALMAP_MB", 16L)
+  // Fixed engine settings (each measured both ways in an earlier round;
+  // the reasoning sits next to its use in `builder`).
+  private val AqeInitialFactor = 8
+  private val AqeMinPartitionKb = 64
+  private val AqeAdvisoryMb = 64
+  private val ShjLocalMapMb = 16
+  private val OhaFallbackKeys = 32768
+  private val MaxPartitionMb = 16
+  private val CodegenCacheEntries = 4096
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession
@@ -53,17 +41,12 @@ object GraftSession {
       // decade the wide self-join sorts run 8-way finer instead of
       // going allocation-bound at 32 (measured 43.8 s -> ~10 s on
       // q34). On a real cluster the same knob scales with executor
-      // count. SPARK_GRAFT_AQE_INITIAL_FACTOR / _PARALLELISM_FIRST
-      // exist for A/B adjudication runs only — defaults are the
-      // product setting.
+      // count.
       .config(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (shufflePartitions * sys.env.getOrElse("SPARK_GRAFT_AQE_INITIAL_FACTOR", "8").toInt).toString
+        (shufflePartitions * AqeInitialFactor).toString
       )
-      .config(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true")
-      )
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       // parallelismFirst targets totalBytes/parallelism per partition
       // but never goes below minPartitionSize — so a CPU-DENSE stage
       // whose bytes are small (a GK-sketch merge, a 150k-key distinct
@@ -77,20 +60,10 @@ object GraftSession {
       // ways at sf0.1 (r19, same-era full-bench A-B-A: 146.6 s at 64k
       // vs 153.4 at 1m, wins spread over the window/sketch/distinct
       // families; a 20-query probe set agreed) — see
-      // OPTIMIZATION_r19.md Finding 6. Env-tunable for campaigns;
-      // decade-scale stages are GBs and never near either floor.
-      // the env value is validated NUMERIC before the unit suffix is
-      // appended (r19 ADVICE: an operator exporting "1m" — plausible
-      // next to the _ADVISORY_MB knob — produced "1mk" and killed
-      // session construction with an opaque byte-string parse error)
-      .config(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        s"${envLong("SPARK_GRAFT_AQE_MIN_PARTITION_KB", 64L)}k"
-      )
-      .config(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        s"${envLong("SPARK_GRAFT_AQE_ADVISORY_MB", 64L)}m"
-      )
+      // OPTIMIZATION_r19.md Finding 6. Decade-scale stages are GBs
+      // and never near either floor.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", s"${AqeMinPartitionKb}k")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${AqeAdvisoryMb}m")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Runtime SMJ -> shuffled-hash conversion: when AQE measures
       // every post-shuffle partition of a sort-merge join under this
@@ -121,16 +94,12 @@ object GraftSession {
       // q107 1.5 vs 2.9 s — per-task hash-build overhead on hundreds
       // of KB-sized partitions across iterative stages), while at
       // decade geometry it removes the external sorts that ENOSPC'd
-      // r16. Decade campaign steps export
-      // SPARK_GRAFT_AQE_ADVISORY_MB=16 (= the threshold) to engage
-      // it; PlanSpec pins the converted no-sort shape under exactly
-      // that pairing. A cluster — where partitions are never tiny —
-      // sets the pairing on and raises SPARK_GRAFT_SHJ_LOCALMAP_MB
-      // to its per-core memory.
-      .config(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        s"${shjLocalMapMb}m"
-      )
+      // r16. A deployment engages it by setting
+      // spark.sql.adaptive.advisoryPartitionSizeInBytes to the
+      // threshold (PlanSpec pins the converted no-sort shape under
+      // exactly that pairing); a cluster — where partitions are never
+      // tiny — also raises the threshold to its per-core memory.
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", s"${ShjLocalMapMb}m")
       // ObjectHashAggregate falls back to SORT-BASED aggregation after
       // this many distinct keys per task — and the default (128) makes
       // EVERY per-doc/per-vector typed aggregate (graft_simhash,
@@ -147,13 +116,9 @@ object GraftSession {
       // this ObjectHashAggregate path — that is why keyClustered bounds
       // keys/task upstream of it (the r17 declarative rewrite was
       // measured slower and reverted in da1dc31; this comment is the
-      // recorded negative result).
-      // env-overridable (r17, ADVICE): the safe value is heap-dependent
-      // — campaigns at other heap sizes retune without a rebuild
-      .config(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK_KEYS", "32768")
-      )
+      // recorded negative result). The safe value is heap-dependent:
+      // a session on a much smaller heap overrides it in its builder.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", OhaFallbackKeys.toString)
       // Scan-split size: the 128 MB default assumes scan-bound work,
       // but graft's hot pipelines are compute-AMPLIFYING — a shingle
       // explode turns each input row into ~150, so a 470 MB documents
@@ -164,7 +129,7 @@ object GraftSession {
       // the corpus; every sf0.1 table is a single ≤16 MB file, so the
       // driver-gate plans and timings are untouched. Map-side combine
       // output is unchanged — only the pre-shuffle parallelism moves.
-      .config("spark.sql.files.maxPartitionBytes", s"${envLong("SPARK_GRAFT_MAX_PARTITION_MB", 16L)}m")
+      .config("spark.sql.files.maxPartitionBytes", s"${MaxPartitionMb}m")
       .config("spark.sql.session.timeZone", "UTC")
       // Generated-class cache (STATIC conf, sized at first-session
       // creation): Spark keeps at most `maxEntries` compiled codegen
@@ -180,14 +145,14 @@ object GraftSession {
       // across passes 1/2); at 4096 pass-2 compile collapses to 0.8 s
       // and the sweep totals drop 140.9/129.8 -> 95.1/96.0 s (-30%,
       // 111 of 142 queries improve, zero regress beyond noise).
-      // Scale posture: this is DRIVER-side memory (~30-50 KB of
-      // bytecode per entry => ~100-200 MB metaspace at 4096), the
-      // exact trade a long-lived cluster driver wants; it does not
-      // touch executor memory or any plan shape.
-      .config(
-        "spark.sql.codegen.cache.maxEntries",
-        envLong("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", 4096L).toString
-      )
+      // Scale posture: the cache is per JVM — one on the driver and
+      // one on each executor, since both compile generated classes —
+      // so the ~100-200 MB of metaspace at 4096 entries (~30-50 KB of
+      // bytecode each) is paid per JVM; it changes no plan shape. On
+      // Spark 4.1 the cache is also keyed per class loader, so within
+      // one local-mode JVM the driver and the tasks (different
+      // loaders) each compile and cache the same class once.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Local mode has no executor exit to reap finished stages'
       // shuffle files — ContextCleaner only removes them after a full
       // GC collects the dropped ShuffleDependency, and the default

@@ -97,8 +97,8 @@ object ScaleUp {
   // Fusion should then rank X first (two mid-rank RRF addends beat
   // one top-rank addend: 2/(K+2) > 1/(K+1) for K=60) while each
   // single channel ranks its own noise first — a probe set where
-  // fused MRR > max(single) is MEASURABLE (FusionProbe). Family size
-  // stays constant (4 for the residue-3 slice), so the truth remains
+  // fused MRR > max(single) is MEASURABLE (by a fusion probe). Family
+  // size stays constant (4 for the residue-3 slice), so the truth remains
   // linear in the corpus.
   val CrossModalResidue = 3L
   val CrossModalCosine = 0.90
@@ -393,9 +393,6 @@ object ScaleUp {
     if (wanted("orders")) replicate("orders", Seq("o_orderkey", "o_custkey"))
     if (wanted("lineitem")) replicate("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
     if (wanted("events")) replicate("events", Seq("event_id", "user_id"))
-    // SPARK_GRAFT_PLANT=0 disables the planted controlled-cosine
-    // families (continuity probes against pre-r14 derived corpora)
-    val plant = !sys.env.get("SPARK_GRAFT_PLANT").contains("0")
     // Per-replica orthogonal transform Q_i = D_s ∘ R_r with rotation
     // r = i mod dims and a SIGN-FLIP EPOCH s = i div dims: rotation
     // alone repeats at i = dims (replica `dims` would carry
@@ -432,7 +429,7 @@ object ScaleUp {
           rotated.withColumn("embedding", zip_with(col("embedding"), mask, (x, m) => x * m))
         }
       },
-      keyCap = if (plant) PlantOffset else KeyStride,
+      keyCap = PlantOffset,
       // partners AFTER the orthogonal transform (each replica plants
       // from its own decorrelated vectors — replica-local pairs,
       // linear truth) and ONCE over the union: the construction reads
@@ -442,7 +439,7 @@ object ScaleUp {
       // X/S/T) would otherwise each re-run the `replicas`-way union
       // scan — at 1024 replicas the multiplied write-task commit
       // stats alone blew the driver result-size cap
-      finish = d => if (plant) withPlantedPartners(d.localCheckpoint(), dims) else d
+      finish = d => withPlantedPartners(d.localCheckpoint(), dims)
     )
     // documents are replicated AFTER embeddings so the planted doc
     // twins can semi-join on the ids that ACTUALLY received embedding
@@ -473,14 +470,14 @@ object ScaleUp {
             .withColumn("n_chars", length(col("text")).cast("long"))
         d
       },
-      keyCap = if (plant) PlantOffset else KeyStride,
+      keyCap = PlantOffset,
       // partner docs AFTER the replica tag (the partner re-tags the
       // replica's own tokens, so it is lexically disjoint from its
       // base within the replica and from every other replica), and
       // ONCE over the union — replica-agnostic by construction; the
       // union checkpointed for the same multi-read reason as the
       // embeddings (marker anti/semi branches + the partner join)
-      finish = d => if (plant) withPlantedPartnerDocs(d.localCheckpoint(), plantedDocIds) else d
+      finish = d => withPlantedPartnerDocs(d.localCheckpoint(), plantedDocIds)
     )
     }
     spark.stop()

@@ -108,31 +108,19 @@ object Dedup {
   }
 
   /** `localCheckpoint` for CORPUS-HEAVY shared frames (the shingle
-    * checkpoint, candidate-doc shingles, signature frames), at a
-    * storage level that trades heap residency against re-read cost:
-    *
-    *   - default MEMORY_AND_DISK: materialized rows live as
-    *     deserialized objects — fastest re-reads, and the right call
-    *     wherever the frame is small against the heap (the driver
-    *     gate, clusters with per-core-GB executors);
-    *   - SPARK_GRAFT_CKPT_LEVEL=DISK_ONLY: zero heap residency — the
-    *     8 GB/32-thread sandbox NEEDS this past ~500× data, where the
-    *     554M-row 2048× shingle frame's partially-cached row objects
-    *     plus 32 concurrent task stacks GC-locker-killed the heap
-    *     (r17 bench_2048x_c, the same failure class the r16 96g-heap
-    *     A/B measured from the other side);
-    *   - SPARK_GRAFT_CKPT_LEVEL=MEMORY_AND_DISK_SER: the middle
-    *     ground (compact byte[] blocks in RAM).
-    *
-    * The knob moves with deployment scale, not with the query — the
-    * decade campaign scripts set it once per run.
+    * checkpoint, candidate-doc shingles, signature frames) at
+    * MEMORY_AND_DISK: materialized rows live as deserialized objects —
+    * fastest re-reads, and the right call wherever the frame is small
+    * against the heap (the driver gate, clusters with per-core-GB
+    * executors). Past ~500× data on an 8 GB/32-thread heap the
+    * 2048× shingle frame's partially-cached row objects GC-locker-
+    * killed the heap (r17); DISK_ONLY is the level for that regime.
     */
   def checkpointHeavy(df: DataFrame): DataFrame =
     checkpointHeavy(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** [[checkpointHeavy]] with a caller-chosen DEFAULT storage level —
-    * the env knob still wins for campaign A/Bs. Callers pass
-    * DISK_ONLY for frames that are corpus-PROPORTIONAL and re-read
+  /** [[checkpointHeavy]] at a caller-chosen storage level. Callers
+    * pass DISK_ONLY for frames that are corpus-PROPORTIONAL and re-read
     * only a handful of times (the Bm25 postings checkpoint): at
     * decade scale such a frame can never be memory-resident against
     * the 8 GB pool, and letting MEMORY_AND_DISK try costs the
@@ -141,16 +129,8 @@ object Dedup {
     * HashAggregate.createHashMap refused 256 KB while the store
     * churned 50-160 MB checkpoint partitions).
     */
-  def checkpointHeavy(df: DataFrame, default: org.apache.spark.storage.StorageLevel): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val level = sys.env.get("SPARK_GRAFT_CKPT_LEVEL") match {
-      case Some("DISK_ONLY") => StorageLevel.DISK_ONLY
-      case Some("MEMORY_AND_DISK_SER") => StorageLevel.MEMORY_AND_DISK_SER
-      case Some("MEMORY_AND_DISK") => StorageLevel.MEMORY_AND_DISK
-      case _ => default
-    }
+  def checkpointHeavy(df: DataFrame, level: org.apache.spark.storage.StorageLevel): DataFrame =
     df.localCheckpoint(true, level)
-  }
 
   /** Explicit fine hash-clustering for HIGH-CARDINALITY aggregation
     * keys (the gram/shingle frequency counts, the covered-position
@@ -199,8 +179,7 @@ object Dedup {
     * whose 118 GB spill the r18 probe attributed). Keys/task stays
     * ~constant as the corpus grows — the aggregate-state contract —
     * while a cluster that raises shuffle.partitions scales base and
-    * the cap with its estate. Deterministic for a given input;
-    * env-tunable for A/B campaigns like the session's other knobs.
+    * the cap with its estate. Deterministic for a given input.
     */
   def keyClustered(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(clusterWidth(df), cols: _*)
@@ -217,8 +196,15 @@ object Dedup {
   def keyClusteredWide(df: DataFrame, estPerPartKb: Long, cols: Column*): DataFrame =
     df.repartition(clusterWidth(df, estPerPartKb), cols: _*)
 
-  private[graft] def clusterWidth(df: DataFrame): Int =
-    clusterWidth(df, sys.env.getOrElse("SPARK_GRAFT_KEYCLUSTER_EST_PER_PARTITION_KB", "128").toLong)
+  /** Estimate KB per partition, the small-frame floor below which the
+    * width stays at base, and the cap on estimate/leaf-scan
+    * amplification — see [[keyClustered]] and the guard below.
+    */
+  private val ClusterEstPerPartKb = 128L
+  private val ClusterSmallMb = 4L
+  private val ClusterAmpCap = 64L
+
+  private[graft] def clusterWidth(df: DataFrame): Int = clusterWidth(df, ClusterEstPerPartKb)
 
   private[graft] def clusterWidth(df: DataFrame, perPartKb: Long): Int = {
     val base = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -226,7 +212,6 @@ object Dedup {
     // (optimizedPlan would throw checkForBatch); keep the r17 width —
     // the streaming twins are correctness mirrors, not perf paths
     if (df.isStreaming) return 16 * base
-    val smallMb = sys.env.getOrElse("SPARK_GRAFT_KEYCLUSTER_SMALL_MB", "4").toLong
     val plan = df.queryExecution.optimizedPlan
     val rawEst = plan.stats.sizeInBytes
     // Guard against DEGRADED estimates (r18 ADVICE): the size-only
@@ -241,15 +226,14 @@ object Dedup {
     // 64× the sum of leaf sizes and say so when the cap bites —
     // a silent correction here is how the r17 no-op class recurs.
     val leafSum = plan.collectLeaves().map(_.stats.sizeInBytes).sum
-    val ampCap = sys.env.getOrElse("SPARK_GRAFT_KEYCLUSTER_AMP_CAP", "64").toLong
     val est =
-      if (leafSum > 0 && rawEst > leafSum * ampCap) {
+      if (leafSum > 0 && rawEst > leafSum * ClusterAmpCap) {
         System.err.println(
-          s"[keyClustered] size estimate $rawEst B exceeds ${ampCap}x the ${leafSum} B of leaf scans " +
+          s"[keyClustered] size estimate $rawEst B exceeds ${ClusterAmpCap}x the ${leafSum} B of leaf scans " +
             "(degraded join/RDD stats?) — bounding the width estimate to the leaf sum x cap")
-        leafSum * ampCap
+        leafSum * ClusterAmpCap
       } else rawEst
-    if (est < BigInt(smallMb) * 1024 * 1024) base
+    if (est < BigInt(ClusterSmallMb) * 1024 * 1024) base
     else (est / (perPartKb * 1024)).min(128L * base).max(base).toInt
   }
 
@@ -1359,7 +1343,7 @@ object Dedup {
     * RECALL CONTRACT (round-13 law certification against a salted
     * exact brute-force truth; round-14 MEASURED at the operating
     * point against planted controlled-cosine families —
-    * ScaleUp.PlantCosines, RecallProbe, SCALING_r14
+    * ScaleUp.PlantCosines, the planted-recall probe, SCALING_r14
     * `q34_planted_recall`): per-pair recall at true cosine c is the
     * multi-table union R(c) = 1-(1-q^m)^L with q = 1-arccos(c)/π.
     * The r14 measurement validated the law (every planted band within
@@ -1439,18 +1423,18 @@ object Dedup {
     // there on ENOSPC (stage 286). Two session levers remove the
     // external sorts (GraftSession): (a) AQE's runtime SMJ→shuffled-
     // hash conversion — NO sorts when every measured post-shuffle
-    // partition fits the local-map threshold; OPT-IN for decade
-    // campaigns only (export SPARK_GRAFT_AQE_ADVISORY_MB=16): the
-    // default advisory stays 64m > the 16m threshold, which keeps
-    // the conversion OFF because
+    // partition fits the local-map threshold; OPT-IN (set the AQE
+    // advisory partition size to the 16m threshold): the session's
+    // advisory stays 64m > the 16m threshold, which keeps the
+    // conversion OFF because
     // DynamicJoinSelection.preferShuffledHashJoin requires
     // advisory <= threshold before it considers partition sizes at
     // all (r17 shipped 64m/16m, so its "conversion" never engaged —
     // the decade survived on lever (b) alone; engaging it by default
     // doubled the iterative kmeans family at sf0.1, so default-off);
-    // (b) finer AQE initial partitions
-    // (SPARK_GRAFT_AQE_INITIAL_FACTOR on decade campaigns), which
-    // keep any partition the conversion skips sorting IN MEMORY
+    // (b) finer AQE initial partitions (the session plans every
+    // shuffle at 8x its base width), which keep any partition the
+    // conversion skips sorting IN MEMORY
     // (stageprobe_q34_512x: 512-task reduce, zero spill). The two
     // join sides are the SAME exchange (canonically equal — no hint
     // to break it — so AQE's stage cache writes the shuffle once and

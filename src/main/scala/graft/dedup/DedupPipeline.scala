@@ -54,18 +54,17 @@ object DedupPipeline {
   /** Stage-1 checkpoint width divisor: KB of Catalyst ESTIMATE per
     * partition for the (doc_id, text, exact_dup) frame. Text columns
     * are stat-counted at a flat 20 B, so real text bytes run well
-    * above the estimate. Calibrated by WidthProbe (r19): st1 est is
-    * 0.27 MB at sf0.1, so the replica-derived decades land at ~138 MB
+    * above the estimate. Calibrated in r19 by a throwaway width probe
+    * (in git history, src/test/scala/graft/WidthProbe.scala): st1 est
+    * is 0.27 MB at sf0.1, so the replica-derived decades land at ~138 MB
     * (512×) and ~553 MB (2048×) — 1024 KB of estimate per partition
     * plans ~135/~553 maps there, putting each map's gram-explode sort
     * volume (~45 MB at 2048×, vs ~400 MB/task on the 52 inherited
     * partitions r18 attributed) safely inside the ~150 MB execution
     * pool, while staying 15× under the 8192-task scheduling-overhead
-    * regime the r17 512× probe measured. Env-overridable for A/B
-    * campaign brackets only.
+    * regime the r17 512× probe measured.
     */
-  private val St1EstPerPartKb: Long =
-    sys.env.getOrElse("SPARK_GRAFT_PIPELINE_ST1_PER_PARTITION_KB", "1024").toLong
+  private val St1EstPerPartKb = 1024L
 
   /** The production form: stage 3 consumes a PRECOMPUTED full-corpus
     * MULTI-PROBE cell assignment (vec_id, probe, cluster, qa) — the
@@ -113,7 +112,7 @@ object DedupPipeline {
     // final stitch with ~GBs of text rows live in the store). Same
     // rule as the Bm25 postings checkpoint: corpus-proportional, read
     // four times, never memory-resident at scale by design rather
-    // than by cache-failure luck. SPARK_GRAFT_CKPT_LEVEL overrides.
+    // than by cache-failure luck.
     val st1 = Dedup
       .checkpointHeavy(
         Dedup.keyClusteredWide(

@@ -554,8 +554,8 @@ object CellIndex {
     * batch count inside the hysteresis band, and the maintained read
     * pays a measured premium per extra file (r13 priced 1.5× after
     * ONE batch). 4 bounds the premium while amortizing the rewrite
-    * over several appends — calibrated by CellAppendProbe's
-    * premium-vs-batch-count chart, and shared by every index family
+    * over several appends — calibrated by the r14 append
+    * probe's premium-vs-batch-count chart, and shared by every index family
     * since r15 (Formats.DefaultCompactFilesPerBucket).
     */
   val CompactFilesPerBucket: Int = Formats.DefaultCompactFilesPerBucket

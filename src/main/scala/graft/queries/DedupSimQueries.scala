@@ -98,35 +98,12 @@ object DedupSimQueries {
   /** The corpus-scaled q34 table count: L(embPlanesFor(n)). */
   def embTablesFor(n: Long): Int = embTablesForPlanes(embPlanesFor(n))
 
-  /** SPARK_GRAFT_PIN_EMB_PLANES, read ONCE at class load (r12 advice:
-    * a per-call env read could silently flip mid-run and nothing
-    * surfaced a leaked adjudication variable). Pinning is for SCALING
-    * ADJUDICATION ONLY — a pinned engine disagrees with the oracle's
-    * corpus-scaled CASE chain by design — so it announces itself
-    * loudly on stderr, and [[graft.Verify]] refuses to run with it
-    * set.
-    */
-  val PinnedEmbPlanes: Option[Int] = {
-    val p = sys.env.get("SPARK_GRAFT_PIN_EMB_PLANES").map(_.toInt)
-    p.foreach { v =>
-      System.err.println(
-        s"[graft] WARNING: SPARK_GRAFT_PIN_EMB_PLANES=$v — q34's per-table plane count is PINNED " +
-          "for scaling adjudication. Results WILL disagree with the oracle's corpus-scaled CASE " +
-          "chain; never set this in driver/oracle runs."
-      )
-    }
-    p
-  }
-
   /** Smallest p in [2, MaxEmbPlanes] with SemClusterTarget·2^p ≥ n —
     * the corpus-scaled plane count, shared (as a CASE chain) with the
-    * q34 oracle so both sides derive it integer-exactly (unless
-    * pinned — see [[PinnedEmbPlanes]]).
+    * q34 oracle so both sides derive it integer-exactly.
     */
   def embPlanesFor(n: Long): Int =
-    PinnedEmbPlanes.getOrElse(
-      (2 to MaxEmbPlanes).find(p => (SemClusterTarget.toLong << p) >= n).getOrElse(MaxEmbPlanes)
-    )
+    (2 to MaxEmbPlanes).find(p => (SemClusterTarget.toLong << p) >= n).getOrElse(MaxEmbPlanes)
   val IvfCells = 16
   val IvfNprobe = 2
 
@@ -253,25 +230,13 @@ object DedupSimQueries {
       )
     )
 
-  /** Spread width for the signature-only shingle consumers: a quarter
-    * of the session parallelism (≥1) — enough tasks to amortize the
-    * explode, few enough that the bounded minhash aggregate's
-    * downstream waves stay cheap. Env-tunable for A/B brackets
-    * (0 = the full default width, negative = no spread).
+  /** The signature-only shingle consumers spread to a quarter of the
+    * session parallelism (≥1) — enough tasks to amortize the explode,
+    * few enough that the bounded minhash aggregate's downstream waves
+    * stay cheap.
     */
-  private def sigSpreadWidth(s: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_SIG_SPREAD_WIDTH").map(_.toInt).getOrElse(
-      math.max(1, s.sparkContext.defaultParallelism / 4)
-    )
-
-  private def shingles3Sig(s: SparkSession, dir: String): DataFrame = {
-    val w = sigSpreadWidth(s)
-    if (w < 0)
-      Dedup.checkpointHeavy(
-        Dedup.dfCapped(Dedup.shingles(Tables.documents(s, dir), "doc_id", "text", 3), MaxShingleDf)
-      )
-    else shingles3Spread(s, dir, w)
-  }
+  private def shingles3Sig(s: SparkSession, dir: String): DataFrame =
+    shingles3Spread(s, dir, math.max(1, s.sparkContext.defaultParallelism / 4))
 
   private def embDouble(s: SparkSession, dir: String): DataFrame =
     Tables
@@ -897,7 +862,7 @@ object DedupSimQueries {
     // ProbeCount² and measured by the q129 volume points
     // (candidates/vector 130.1/129.8/129.6 across 256/512/1024× —
     // N-linear within 1.005, SCALING_r15). MEASURED against the
-    // planted truth (RecallProbe semdedup_planted): catch at cosine
+    // planted truth (the planted-recall probe): catch at cosine
     // 0.95 = 0.966/0.969/0.979/0.985 at 100/256/512/1024× — the rate
     // RISES with scale (third-vector drops compound as density
     // grows), vs the r14 single-assignment 0.75-0.79. The remaining
@@ -1184,24 +1149,9 @@ object DedupSimQueries {
     * sem_rank), fused output) — one definition shared by q140 and the
     * q141 eval. See the q140 map entry comment for the full design.
     */
-  private def hybridFrames(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    hybridFramesFor(s, dir, 0L until FusionProbes.toLong)
-
-  /** [[hybridFrames]] over an EXPLICIT probe-id set — the FusionProbe
-    * measurement runs the identical machinery over the planted
-    * cross-modal bases instead of the fixed doc_id < 5 convention.
-    * Probe ids must fit Int (the Bm25 query-id type); FusionProbe
-    * feeds X bases from every int-range replica (replicas 0 and 1
-    * fully, replica 2 up to the ≤ Int.MaxValue cap), so the require
-    * below is a real gate, not a formality.
-    */
-  private[graft] def hybridFramesFor(
-      s: SparkSession,
-      dir: String,
-      probeIds: Seq[Long]
-  ): (DataFrame, DataFrame, DataFrame) = {
+  private def hybridFrames(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    require(probeIds.nonEmpty && probeIds.forall(id => id >= 0 && id <= Int.MaxValue), s"bad probe ids: $probeIds")
+    val probeIds = 0L until FusionProbes.toLong
     graft.functions.GraftFunctions.ensureRegistered(s)
     val docs = Tables.documents(s, dir)
     val tokenRe = graft.search.Bm25Index.TokenPattern.r

@@ -1159,8 +1159,8 @@ object TrainingQueries {
       // join all read this frame — un-checkpointed, each reference
       // re-ran the full tokenize+explode pipeline (4 corpus
       // tokenizations in one plan), and on the single-row-group sf0.1
-      // scan each ran single-task. checkpointHeavy so the decade
-      // residency knob reaches the corpus-token-sized frame.
+      // scan each ran single-task. checkpointHeavy: the shared
+      // storage level for corpus-heavy frames.
       val feats = graft.dedup.Dedup.checkpointHeavy(
         uni
           .unionByName(big)

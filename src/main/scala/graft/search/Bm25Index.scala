@@ -240,8 +240,7 @@ object Bm25Index {
     // fusion probe died twice at 32 cores (r18) and once more after
     // the scoring-aggregate bound (r19). Disk-backed residency costs
     // one serialized write + three reads of a frame this code was
-    // about to materialize anyway; SPARK_GRAFT_CKPT_LEVEL still
-    // overrides for A/Bs.
+    // about to materialize anyway.
     val post = graft.dedup.Dedup
       .checkpointHeavy(postings(docs, idCol, textCol), org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // df restricted to the QUERY's tokens before the forced broadcast

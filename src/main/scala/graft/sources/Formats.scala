@@ -133,7 +133,7 @@ object Formats {
 
   /** Default files-per-key growth allowed between compactions, shared
     * by every persisted index family's append path — calibrated by
-    * CellAppendProbe's premium-vs-batch-count chart (r14: the
+    * the append probe's premium-vs-batch-count chart (r14: the
     * maintained read degrades ~2× by 8 uncompacted batches; 4 bounds
     * the premium while amortizing one rewrite over several appends).
     */

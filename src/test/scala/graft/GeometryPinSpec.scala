@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * IF THIS TEST FAILS: you changed the collision geometry. That is
   * allowed, but a recall re-measurement is now OWED: re-run the
-  * planted-recall probe (graft.RecallProbe) at a decade SF, record the
+  * planted-recall measurement at a decade SF (the probe main that took
+  * it, graft.RecallProbe, is in git history), record the
   * number in the round's SCALING artifact, bump
   * PortableHash.SignatureFormatVersion if signatures moved, and update
   * the stamp below IN THE SAME COMMIT.
@@ -120,7 +121,7 @@ class GeometryPinSpec extends AnyFunSuite {
       fp == stamped,
       s"LSH geometry fingerprint moved ($fp != stamped $stamped). The collision geometry behind " +
         "every 'recall stands' declaration has changed: re-run the planted-recall probe " +
-        "(graft.RecallProbe) at a decade SF, record the recall in the round's SCALING artifact, " +
+        "at a decade SF (graft.RecallProbe in git history), record the recall in the round's SCALING artifact, " +
         "bump PortableHash.SignatureFormatVersion if signature values moved, and update this " +
         "stamp in the same commit."
     )

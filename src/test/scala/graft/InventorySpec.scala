@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY.md §2 is the coverage contract the judge checks line by
@@ -7,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * invisible to the next round's checklist (the r8 q123 gap), and a
   * §2 row with no query is a claim the driver never verifies. This
   * spec pins the two sets equal so the inventory can never drift
-  * from the code again.
+  * from the code again. The same holds for settings: the README's
+  * settings table must name exactly the environment variables the
+  * program reads. Every test here reads files only; none starts Spark.
   */
 class InventorySpec extends AnyFunSuite {
 
@@ -51,6 +55,45 @@ class InventorySpec extends AnyFunSuite {
     assert(noOracle.isEmpty, s"queries without a DuckDB oracle: ${noOracle.toSeq.sorted.mkString(", ")}")
     val danglingOracle = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(danglingOracle.isEmpty, s"oracles without a query: ${danglingOracle.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("README settings table lists exactly the SPARK_GRAFT_* variables the program reads") {
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.nonEmpty, "no Scala sources under src/main/scala")
+    val read = files.flatMap { f =>
+      EnvVar.findAllIn(new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).toList
+    }.toSet
+    val src = scala.io.Source.fromFile("README.md", "UTF-8")
+    val documented =
+      try
+        src.getLines()
+          .dropWhile(_.trim != "## Settings")
+          .drop(1)
+          .takeWhile(!_.startsWith("## "))
+          .collect { case SettingRow(name) => name }
+          .toSet
+      finally src.close()
+    assert(documented.nonEmpty, "README has no '## Settings' table")
+    assert(
+      read == documented,
+      s"settings drift — read but not in the README table: ${(read -- documented).toSeq.sorted.mkString(", ")}; " +
+        s"in the table but read nowhere: ${(documented -- read).toSeq.sorted.mkString(", ")}"
+    )
+  }
+
+  private val EnvVar = "SPARK_GRAFT_[A-Z0-9_]+".r
+
+  /** A settings table row: `| `SPARK_GRAFT_X` | ... |`. */
+  private object SettingRow {
+    private val P = """^\|\s*`(SPARK_GRAFT_[A-Z0-9_]+)`\s*\|.*""".r
+    def unapply(line: String): Option[String] = line match {
+      case P(name) => Some(name)
+      case _       => None
+    }
   }
 
   /** A §2 table row: `| qNN_name | ... |`. */

@@ -15,6 +15,32 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Data-exchange count in a physical plan string (broadcast
+    * exchanges excluded — they are the cheap alternative): the
+    * counting rule behind the shuffle-budget assertion.
+    *
+    * Exchanges carrying a plan_id are counted ONCE per id: a scalar
+    * subquery referenced from several operators re-renders its whole
+    * subtree (same plan_id) at every reference site, but executes
+    * once — q102's bloom-build exchange would otherwise count 3×.
+    * Id-less renderings keep the raw count. KNOWN LIMITATION (r7
+    * advice): plan strings rendered WITHOUT plan ids (AQE off) can
+    * therefore still overcount a multiply-referenced subquery
+    * exchange once per rendering — deduping identical id-less
+    * subtree strings would instead UNDERcount genuinely distinct
+    * exchanges that happen to render identically (two scans of the
+    * same table aggregated the same way), so the count accepts the
+    * conservative overcount there. The budgets run with AQE on
+    * (plan ids present), where the count is exact.
+    */
+  private def countShuffles(plan: String): Int = {
+    val withId = "Exchange (?:hash|range|SinglePartition)[^\n]*\\[plan_id=(\\d+)\\]".r
+    val idMatches = withId.findAllMatchIn(plan).toSeq
+    val distinctIds = idMatches.map(_.group(1)).toSet.size
+    val all = "Exchange (hash|range|SinglePartition)".r.findAllIn(plan).size
+    distinctIds + (all - idMatches.size)
+  }
+
   test("q03 pushes filter and projection into the parquet scan") {
     val p = plan("q03_filter_project")
     // plan strings truncate long filter lists — assert on the list head
@@ -426,7 +452,7 @@ class PlanSpec extends AnyFunSuite {
     val missing = SparkEntry.queries.keySet -- shuffleBudget.keySet
     assert(missing.isEmpty, s"new operators need a shuffle budget: $missing")
     val over = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val shuffles = Profile.countShuffles(plan(name))
+      val shuffles = countShuffles(plan(name))
       if (shuffles > shuffleBudget(name)) Some(s"$name: $shuffles > ${shuffleBudget(name)}") else None
     }
     assert(over.isEmpty, s"shuffle budget exceeded:\n${over.mkString("\n")}")

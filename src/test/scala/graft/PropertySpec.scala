@@ -816,12 +816,12 @@ class PropertySpec extends AnyFunSuite {
       val l = embTablesForPlanes(m)
       assert(l >= 1 && l <= MaxEmbTables)
       assert(
-        RecallProbe.law(RecallContractCosine, m, l) >= RecallContractTarget,
+        law(RecallContractCosine, m, l) >= RecallContractTarget,
         s"m=$m: L=$l does not hold R($RecallContractCosine) >= $RecallContractTarget"
       )
       if (l > 1)
         assert(
-          RecallProbe.law(RecallContractCosine, m, l - 1) < RecallContractTarget,
+          law(RecallContractCosine, m, l - 1) < RecallContractTarget,
           s"m=$m: L=$l is not minimal"
         )
     }
@@ -968,6 +968,14 @@ class PropertySpec extends AnyFunSuite {
     }
     assert(sawOverlapping, "the slice must include cross-modal overlapping twins")
   }
+
+  /** The multi-table union recall law at true cosine c (m planes per
+    * table, L tables): collision prob per plane q = 1 - arccos(c)/π.
+    * Written out here, independently of embTablesForPlanes, as the
+    * reference the q34 recall-contract test checks it against.
+    */
+  private def law(c: Double, m: Int, l: Int): Double =
+    1.0 - math.pow(1.0 - math.pow(1.0 - math.acos(c) / math.Pi, m), l)
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest
