@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Formats
@@ -20,11 +20,16 @@ import graft.sources.Formats
   * returns plus O(batches) rows of side metadata:
   *
   *   - tf, dl: on the postings row itself;
-  *   - df(t): count of postings for t — complete because the read
-  *     returns ALL of a matched token's postings;
+  *   - df(t): count of postings for t, a window over the pruned read
+  *     partitioned by token — complete because the read returns ALL
+  *     of a matched token's postings, and exchange-free because a
+  *     bucketed scan is already hash-partitioned by token;
   *   - n_docs, sum_dl: from the `<table>_stats` companion table, one
-  *     row per ingest batch, summed at query time (never a corpus
-  *     scan).
+  *     row per ingest batch, read and summed on the driver at query
+  *     time (never a corpus scan).
+  *
+  * So a search is one plan whose only shuffle is on query_id, for the
+  * score sum and the top-k ranking together (see [[search]]).
   *
   * Scoring uses q76's rational-idf BM25 (k1 = 1.2, b = 0.75; idf =
   * (N - df + 0.5)/(df + 0.5), no libm) with one boundary hardening:
@@ -51,6 +56,11 @@ import graft.sources.Formats
   */
 object Bm25Index {
 
+  /** One query term's entry in [[search]]'s request literal: the ids of
+    * the queries that ask for it, and the corpus stats its score needs.
+    */
+  private case class TermRequest(query_ids: Seq[Int], n_docs: Long, sum_dl: Long)
+
   /** Bump when the tokenizer regex or scoring constants change: an
     * index built under another version must not serve queries.
     */
@@ -70,12 +80,27 @@ object Bm25Index {
     * a doc-keyed side table (which would shuffle on doc_id — the key
     * the bucketing deliberately does NOT use).
     */
-  def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    postingsObserving(docs, idCol, textCol, None)
+
+  /** [[postings]], optionally observing the batch's stats row on the
+    * per-doc length frame: one row per document, so `count` there is
+    * n_docs and `sum(dl)` is sum_dl — the same values [[batchStats]]
+    * derives with a second evaluation of the whole tokenise → group →
+    * join pipeline.
+    */
+  private def postingsObserving(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      stats: Option[Observation]
+  ): DataFrame = {
     val tf = docs
       .select(col(idCol).as("doc_id"), explode(expr(s"regexp_extract_all(lower($textCol), '$TokenPattern', 0)")).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    val dl0 = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    val dl = stats.fold(dl0)(o => dl0.observe(o, count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
     tf.join(dl, "doc_id").select(col("token"), col("doc_id"), col("tf"), col("dl"))
   }
 
@@ -93,14 +118,14 @@ object Bm25Index {
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
     }
-    val post = postings(docs, idCol, textCol)
-    Formats.writeBucketed(post, table, "token", numBuckets)
+    val stats = writePostings(docs, idCol, textCol, table, numBuckets, SaveMode.Overwrite)
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('$VersionProp' = '$FormatVersion')")
-    batchStats(post).write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(statsTable(table))
+    stats.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(statsTable(table))
   }
 
   /** Append a batch: version gate FIRST, postings appended under the
-    * stored bucket spec, one stats row appended. Doc ids must be
+    * stored bucket spec, one stats row appended — observed during the
+    * postings write, so the batch is tokenised once. Doc ids must be
     * disjoint from prior batches (the ingest contract everywhere in
     * this codebase) — df/n_docs arithmetic double-counts otherwise.
     */
@@ -112,18 +137,11 @@ object Bm25Index {
     val numBuckets = meta.bucketSpec
       .map(_.numBuckets)
       .getOrElse(throw new IllegalStateException(s"bm25 index '$table' is not bucketed"))
-    val post = postings(docs, idCol, textCol)
-    // one file per bucket per append batch (see Formats.writeBucketed)
-    post
-      .repartition(numBuckets, col("token"))
+    writePostings(docs, idCol, textCol, table, numBuckets, SaveMode.Append)
       .write
       .mode(SaveMode.Append)
-      .option("maxRecordsPerFile", Formats.MaxRecordsPerFile.toString)
       .format("parquet")
-      .bucketBy(numBuckets, "token")
-      .sortBy("token")
-      .saveAsTable(table)
-    batchStats(post).write.mode(SaveMode.Append).format("parquet").saveAsTable(statsTable(table))
+      .saveAsTable(statsTable(table))
     // r15: postings grow one file per bucket per batch, stats one file
     // per batch — both bounded by the shared relative-threshold
     // compaction (no-op below it; see Formats.compactBucketed)
@@ -146,11 +164,59 @@ object Bm25Index {
     postingsRan || statsRan
   }
 
-  private def batchStats(post: DataFrame): DataFrame =
+  /** A batch's stats row (n_docs, sum_dl), from a second evaluation of
+    * its postings: the reference the observed row of [[writePostings]]
+    * must equal, and its recount when a re-run map stage made the
+    * observation unreliable.
+    */
+  private[graft] def batchStats(post: DataFrame): DataFrame =
     post
       .groupBy(col("doc_id"))
       .agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+
+  /** Write a batch's postings into the token-bucketed `table` (one file
+    * per bucket per batch, see Formats.writeBucketed) and return its
+    * stats row, observed on the per-doc frame during that same write,
+    * so tokenise → group → join runs once.
+    *
+    * The observation is accumulator-backed and sits in a map stage,
+    * which Spark can re-run after a fetch failure and then count twice.
+    * A second observation, Σtf over the written postings, sits in the
+    * write's result stage, whose updates Spark applies once per
+    * partition; Σdl over the docs must equal it, and when it does not
+    * the row is recounted with [[batchStats]]. Observation names are
+    * fixed, not minted per call, so every batch's write plans alike.
+    */
+  private def writePostings(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      table: String,
+      numBuckets: Int,
+      mode: SaveMode
+  ): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val perDoc = new Observation("bm25_batch_docs")
+    val written = new Observation("bm25_batch_postings")
+    val post = postingsObserving(docs, idCol, textCol, Some(perDoc))
+    post
+      .repartition(numBuckets, col("token"))
+      .observe(written, sum(col("tf")).as("sum_tf"))
+      .write
+      .mode(mode)
+      .option("maxRecordsPerFile", Formats.MaxRecordsPerFile.toString)
+      .format("parquet")
+      .bucketBy(numBuckets, "token")
+      .sortBy("token")
+      .saveAsTable(table)
+    // an observed map omits null metrics: an empty batch has no sums
+    val m = perDoc.get
+    val sumDl = m.get("sum_dl").map(_.asInstanceOf[Long])
+    if (sumDl != written.get.get("sum_tf")) batchStats(post)
+    else Seq((m("n_docs").asInstanceOf[Long], sumDl)).toDF("n_docs", "sum_dl")
+  }
 
   /** Open a persisted index, refusing a format-version mismatch
     * (metadata-only check).
@@ -170,36 +236,64 @@ object Bm25Index {
   /** Top-k BM25 retrieval for a literal query set. `queries` is
     * (query_id, terms) — driver-known by nature (it IS the search
     * request), which is what lets the term filter be an `isin` of
-    * literals the bucketed scan can prune on. Candidate docs per query
-    * are bounded by Σ df(term): the pruned postings, never the corpus.
-    * The per-query ranking window sorts only those candidates (at the
-    * retrieval extreme — a stopword query over 100 TB — the window
-    * would be replaced by the graft_topk bounded heap, q99-style; for
-    * literal curation queries the candidate frame is small by
-    * construction).
+    * literals the bucketed scan can prune on.
+    *
+    * One plan, one shuffle, three jobs (the stats read, the shuffle's
+    * map stage, the result stage):
+    *
+    *   - df(t) is `count(1) over (partition by token)` on the pruned
+    *     bucketed scan. The scan is already hash-partitioned by token
+    *     (one task per bucket), so the window plans no exchange, and
+    *     the scan is read once — no checkpoint, no df side frame.
+    *   - The request is a map literal token → (query ids, n_docs,
+    *     sum_dl), looked up per posting and exploded into one row per
+    *     asking query. A map literal reaches generated code as a
+    *     reference object, so a new term set — or new corpus stats
+    *     after an append — compiles nothing. The corpus stats ride in
+    *     the map because a bare stats literal, or any extraction from
+    *     a literal, is foldable: ConstantFolding would inline it as a
+    *     `long` constant and every append would compile new classes.
+    *   - n_docs and sum_dl are the O(batches) `_stats` rows, read in
+    *     one small scan job and summed on the driver.
+    *   - `repartition(query_id)` is the one exchange: the (query_id,
+    *     doc_id) score sum and the per-query ranking window both
+    *     accept that partitioning.
+    *
+    * Scale note: the exchange sends one query's whole candidate set,
+    * Σ df(term) over its terms, to one task, with no map-side partial
+    * sum. That suits literal curation queries, whose candidates are
+    * few by construction. At the retrieval extreme (a stopword query
+    * over 100 TB) the ranking should instead be the graft_topk bounded
+    * heap over a partially aggregated sum, q99-style.
     */
   def search(spark: SparkSession, table: String, queries: Seq[(Int, Seq[String])], k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(queries.nonEmpty, "queries must be non-empty")
     import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val allTerms = queries.flatMap(_._2).distinct
-    val q = queries
-      .flatMap { case (qid, terms) => terms.distinct.map(t => (qid, t)) }
-      .toDF("query_id", "token")
-    val idx = readIndex(spark, table).filter(col("token").isin(allTerms: _*))
-    // ONE pruned read feeds both df and the scoring join: bucket
-    // pruning happens at the scan, then the frame is tiny.
-    val matched = idx.localCheckpoint()
-    val dfreq = matched.groupBy(col("token")).agg(count(lit(1)).as("df")) // postings unique per (token, doc)
-    val stats = spark
+    val idx = readIndex(spark, table) // the version gate runs before any job
+    val (nDocs, sumDl) = spark
       .table(statsTable(table))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+      .select(col("n_docs"), coalesce(col("sum_dl"), lit(0L))) // an empty batch's sum_dl is null
+      .collect()
+      .foldLeft((0L, 0L)) { case ((n, s), r) => (Math.addExact(n, r.getLong(0)), Math.addExact(s, r.getLong(1))) }
+    val requests = queries
+      .flatMap { case (qid, terms) => terms.distinct.map(_ -> qid) }
+      .groupBy(_._1)
+      .map { case (t, qids) => t -> TermRequest(qids.map(_._2), nDocs, sumDl) }
+    val term = element_at(typedLit(requests), col("token"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("score_bp").desc, col("doc_id").asc)
-    matched
-      .join(broadcast(q), "token")
-      .join(broadcast(dfreq), "token")
-      .crossJoin(broadcast(stats))
+    idx
+      .filter(col("token").isin(requests.keys.toSeq: _*))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token")))) // postings unique per (token, doc)
+      .select(
+        explode(term("query_ids")).as("query_id"),
+        col("doc_id"),
+        col("tf"),
+        col("dl"),
+        col("df"),
+        term("n_docs").as("n_docs"),
+        term("sum_dl").as("sum_dl")
+      )
       .withColumn("avgdl", col("sum_dl").cast("double") / col("n_docs"))
       .withColumn("idf", (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
       .withColumn(
@@ -210,6 +304,7 @@ object Bm25Index {
       // integer basis points BEFORE the sum: order-free accumulation,
       // bit-deterministic ranking (see object doc)
       .withColumn("bp", round(col("s") * lit(10000), 0).cast("long"))
+      .repartition(col("query_id"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("bp")).as("score_bp"))
       .withColumn("rank", row_number().over(w))

@@ -83,6 +83,101 @@ class SearchSpec extends AnyFunSuite {
     assert(e.getMessage.contains("format version"), e.getMessage)
   }
 
+  test("q117: search fans shared, repeated and absent terms out exactly as searchDirect") {
+    val docs = Tables.documents(spark, sf)
+    val tbl = "graft_bm25_spec_fanout"
+    Bm25Index.writeIndex(docs, "doc_id", "text", tbl, Bm25IndexBuckets)
+    val absent = "zzqxjv"
+    assert(Bm25Index.readIndex(spark, tbl).filter(col("token") === absent).isEmpty, s"'$absent' is in the corpus")
+    val queries = Seq(
+      1 -> Seq("customer", "join"),
+      2 -> Seq("join", "merge", "merge"), // shares "join" with 1, repeats "merge"
+      3 -> Seq("dup", absent),
+      4 -> Seq(absent)
+    )
+    val viaIndex = rows(Bm25Index.search(spark, tbl, queries, Bm25TopK))
+    val direct = rows(Bm25Index.searchDirect(docs, "doc_id", "text", queries, Bm25TopK))
+    assert(viaIndex == direct, s"index path diverges: ${viaIndex -- direct} / ${direct -- viaIndex}")
+    assert(viaIndex.map(_._1) == Set(1, 2, 3))
+  }
+
+  test("q117: search is one shuffle in three jobs, recompiles nothing, and the stale-version gate starts no job") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    val docs = Tables.documents(spark, sf)
+    val tbl = "graft_bm25_spec_plan"
+    val (first, rest) = (docs.filter(col("doc_id") % 3 =!= 0), docs.filter(col("doc_id") % 3 === 0))
+    Bm25Index.writeIndex(first, "doc_id", "text", tbl, Bm25IndexBuckets)
+
+    // jobs of `f`, counted by job group: the listener bus is ordered, so
+    // once the closing sentinel job is seen every job of `f` has been
+    val sc = spark.sparkContext
+    val group = "graft_bm25_spec_plan"
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          started.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    def jobsOf(f: => Unit): Int = {
+      started.clear()
+      sc.setJobGroup(group, "op")
+      try f
+      finally {
+        sc.setJobGroup(group, "sentinel")
+        sc.parallelize(Seq(1), 1).count()
+        sc.clearJobGroup()
+      }
+      Iterator
+        .continually(Option(started.poll(60, java.util.concurrent.TimeUnit.SECONDS)).getOrElse(fail("sentinel job not seen")))
+        .takeWhile(_ != "sentinel")
+        .size
+    }
+    def compiles(f: => Unit): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+
+    sc.addSparkListener(listener)
+    try {
+      val search = Bm25Index.search(spark, tbl, Seq(Bm25Queries.head), Bm25TopK)
+      val searchJobs = jobsOf(search.collect())
+      assert(searchJobs <= 3, s"a single-query search ran $searchJobs jobs")
+      val plan = search.queryExecution.executedPlan
+      val helper = new AdaptiveSparkPlanHelper {}
+      assert(helper.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty, s"broadcast in:\n$plan")
+      assert(helper.collect(plan) { case s: ShuffleExchangeLike => s }.size == 1, s"not one shuffle in:\n$plan")
+      assert(
+        !search.queryExecution.optimizedPlan.exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+        "search reads a checkpointed frame"
+      )
+
+      // same arity, other terms: every class comes from the cache
+      assert(compiles(Bm25Index.search(spark, tbl, Seq(Bm25Queries(2)), Bm25TopK).collect()) == 0)
+
+      // the appended batch's stats row is observed during its postings
+      // write and equals a second evaluation of the batch's postings
+      Bm25Index.appendIndex(rest, "doc_id", "text", tbl)
+      val statsRows = spark.table(s"${tbl}_stats").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val expected = Seq(first, rest)
+        .map(d => Bm25Index.batchStats(Bm25Index.postings(d, "doc_id", "text")).head())
+        .map(r => (r.getLong(0), r.getLong(1)))
+        .toSet
+      assert(statsRows == expected)
+      // an empty batch stores a null sum_dl, which search must read
+      Bm25Index.appendIndex(rest.filter(lit(false)), "doc_id", "text", tbl)
+      // new corpus stats reach the plan as data, not as class source
+      assert(compiles(Bm25Index.search(spark, tbl, Seq(Bm25Queries.head), Bm25TopK).collect()) == 0)
+
+      spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES ('${Bm25Index.VersionProp}' = '999')")
+      val staleJobs = jobsOf(intercept[IllegalArgumentException](Bm25Index.search(spark, tbl, Bm25Queries, Bm25TopK)))
+      assert(staleJobs == 0, s"the stale index ran $staleJobs jobs before refusing")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("q140: fused ranking is internally consistent with its two component retrievers") {
     import graft.queries.DedupSimQueries.{FusionProbes, FusionTopK, RrfK}
     val out = SparkEntry
